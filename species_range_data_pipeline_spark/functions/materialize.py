@@ -35,8 +35,7 @@ deliberate, centralized decision and not a default):
    harmless; ``tests/test_checkpoint.py::test_materialize_once_blocks_bounded``
    pins that a loop of lane invocations does not grow block-manager
    storage without bound once references drop.  A long-lived service
-   should either drop frame references promptly (normal Python scoping
-   does) or call ``release()`` below when it holds frames open.
+   should drop frame references promptly (normal Python scoping does).
 
 ``eager=False`` everywhere: materialization happens inside the first
 action that consumes the frame — inside the timed region of every
@@ -55,12 +54,3 @@ def materialize_once(df: DataFrame) -> DataFrame:
     for the fault-tolerance / statistics / GC contract."""
     return df.localCheckpoint(eager=False)
 
-
-def release(df: DataFrame) -> None:
-    """Best-effort early release of a materialized frame's blocks
-    (otherwise GC-driven).  Safe to call on any DataFrame; a frame that
-    was never checkpointed/persisted is a no-op."""
-    try:
-        df.rdd.unpersist(False)
-    except Exception:
-        pass

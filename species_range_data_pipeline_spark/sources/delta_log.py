@@ -64,8 +64,6 @@ for NULL) and are absent from the data files; the last ``add`` for a
 path wins, and a ``remove`` tombstones it.
 """
 
-from __future__ import annotations
-
 import json
 import os
 import re
@@ -172,22 +170,36 @@ def delta_log_versions(path: str) -> list[int]:
     return _scan_log_dir(path)[0]
 
 
-def decoded_file_basename():
-    """The scanned data file's DECODED basename, as a Column —
-    ``input_file_name()`` returns the Hadoop Path URI, which
-    percent-encodes space/%/control bytes (non-ASCII and '+' pass
-    through literally), so a raw basename would silently mismatch a
-    driver-side join key for any file name holding one of those
-    (ADVICE r16: every row of that file vanished).  '+' is pre-escaped
-    because ``url_decode`` speaks form-encoding, where a bare '+'
-    means space."""
+def decoded_scan_path():
+    """The scanned data file's DECODED, scheme-stripped absolute path, as
+    a Column over the scan's ``_metadata.file_path``.  That column is
+    the percent-encoded Hadoop Path URI (space/%/control bytes encoded;
+    non-ASCII and '+' pass through literally), so a raw value would
+    silently mismatch a driver-side join key for any file name holding
+    one of those (ADVICE r16: every row of that file vanished).  '+' is
+    pre-escaped because ``url_decode`` speaks form-encoding, where a
+    bare '+' means space.
+
+    Take it directly off the scan (``withColumn`` on the ``spark.read``
+    result), never from ``input_file_name()``: that one is evaluated
+    where its projection sits, and once a task packs several files
+    under an Arrow-batched UDF that buffers rows (the deletion-vector
+    mask) it names a different file than the row came from, so rows
+    take another file's partition values."""
     return F.url_decode(
         F.regexp_replace(
-            F.element_at(F.split(F.input_file_name(), "/"), -1),
+            F.regexp_replace(F.col("_metadata.file_path"), "^file:(//)?", ""),
             r"\+",
             "%2B",
         )
     )
+
+
+def decoded_file_basename():
+    """The basename of ``decoded_scan_path()`` — the partition-restore
+    join key of the Delta reader and the migrated-layout Iceberg
+    reader."""
+    return F.element_at(F.split(decoded_scan_path(), "/"), -1)
 
 
 def _check_protocol(action: dict, path: str) -> None:
@@ -689,9 +701,14 @@ def _apply_deletion_vectors(
     blobs = {f: load_dv_bytes(path, d) for f, d in dv_map.items()}
     bc = spark.sparkContext.broadcast(blobs)
 
-    def _keep_fn(fp, pos):
+    # pandas loads here, not at import: Python data-source workers
+    # import this module.  The UDF's type hints are evaluated at this
+    # def (the module does not postpone annotations), which is what
+    # lets pandas_udf infer a scalar pandas UDF from them.
+    import pandas as pd
+
+    def _keep_fn(fp: pd.Series, pos: pd.Series) -> pd.Series:
         import numpy as np
-        import pandas as pd
         from urllib.parse import unquote as _unq
 
         from .dv import decode_rbm_array as _dec
@@ -730,9 +747,7 @@ def _apply_deletion_vectors(
             keep[m] = ~hit
         return pd.Series(keep)
 
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    _dv_keep = F.pandas_udf(_keep_fn, "boolean", PandasUDFType.SCALAR)
+    _dv_keep = F.pandas_udf(_keep_fn, "boolean")
 
     return (
         df.withColumn("__row_path", F.col("_metadata.file_path"))
@@ -884,30 +899,31 @@ def _read_files(
         dvd = adds_by_rel[os.path.relpath(f, path)].get("deletionVector")
         if dvd and dvd.get("storageType"):
             dv_files[f] = dvd
+
+    def _scan(paths: list[str]) -> DataFrame:
+        # the partition-restore key is taken at the scan, below the DV
+        # mask's Arrow UDF (see decoded_scan_path)
+        df = spark.read.schema(data_schema).parquet(*paths)
+        if pcols:
+            df = df.withColumn("__delta_file", decoded_file_basename())
+        return df
+
     if not dv_files:
-        df = spark.read.schema(data_schema).parquet(*files)
+        df = _scan(files)
     else:
         # blob-map keys are ABSOLUTE paths (ADVICE r17: a relative table
         # path made the keys relative while the scan's
         # _metadata.file_path is always absolute — every lookup missed)
         dv_map = {os.path.abspath(f): d for f, d in dv_files.items()}
         masked = _apply_deletion_vectors(
-            spark,
-            spark.read.schema(data_schema).parquet(*sorted(dv_files)),
-            path,
-            dv_map,
+            spark, _scan(sorted(dv_files)), path, dv_map
         )
         clean = [f for f in files if f not in dv_files]
-        df = (
-            masked
-            if not clean
-            else spark.read.schema(data_schema)
-            .parquet(*clean)
-            .unionByName(masked)
-        )
+        df = masked if not clean else _scan(clean).unionByName(masked)
     if mapping:
         df = df.select(
-            *[F.col(phys(f.name)).alias(f.name) for f in data_fields]
+            *[F.col(phys(f.name)).alias(f.name) for f in data_fields],
+            *(["__delta_file"] if pcols else []),
         )
 
     if pcols:
@@ -935,8 +951,7 @@ def _read_files(
         pv_df = spark.createDataFrame(pv_rows, pv_schema)
         types = {f.name: f.dataType for f in schema.fields}
         df = (
-            df.withColumn("__delta_file", decoded_file_basename())
-            .join(F.broadcast(pv_df), "__delta_file")
+            df.join(F.broadcast(pv_df), "__delta_file")
             .select(
                 *[
                     F.col(f"__pv_{c}").cast(types[c]).alias(c)

@@ -1,54 +1,41 @@
-"""Streaming source over a FOREIGN Delta log: version-offset tailing.
-
-``sources/manifest_stream.py`` tails the engine's own table format;
-this module is the same Delta-streaming-source shape pointed at an
-external ``_delta_log`` (VERDICT r16 next #7), on Spark 4's Python
-streaming data source API:
+"""Streaming source over a FOREIGN Delta log (format ``delta_tail``),
+the Delta adapter of the shared log-tail reader (``sources/log_tail.py``,
+which states the offset, append-only and replay contract):
 
     register_delta_stream_source(spark)
     stream = spark.readStream.format("delta_tail").option("path", tbl).load()
 
-- **Offsets are commit versions.**  ``latestOffset`` is the newest
-  JSON-visible version; a microbatch covers the versions in
-  ``(start, end]`` and its input partitions are exactly the data files
-  those commits ADDED with ``dataChange=true`` — one Spark task per
-  file, never a table rescan.  Commit JSONs are immutable, so a batch
-  replayed from the checkpoint after a crash re-reads precisely the
-  same rows: exactly-once end-to-end with an idempotent sink.
-- **Append-only contract, explicitly.**  A version that removed files
-  with ``dataChange=true``, or added a file carrying a deletion
-  vector (DML rewrites always do one of these), is not representable
-  as an insert-only stream: default is a loud failure;
-  ``.option("skipChangeCommits", "true")`` ignores those versions —
-  Delta's own knob and name.  Compaction commits (``dataChange=false``
-  on both sides) contribute nothing and are skipped silently, exactly
-  like Delta's source.  Row-level change consumption is the batch
+- Offsets are commit versions; a batch's files are the ones its commits
+  ADDED with ``dataChange=true``.  A version that removed files with
+  ``dataChange=true``, or added a file carrying a deletion vector (DML
+  rewrites always do one of these), is a change commit; compaction
+  commits (``dataChange=false`` on both sides) contribute nothing and
+  are skipped silently, exactly like Delta's source.  Row-level change
+  consumption is ``delta_cdf_tail``'s or the batch
   ``read_delta_changes`` feed's job.
-- **Partition columns are restored per file** from the add action's
-  ``partitionValues`` (typed at read); files written before a column
-  was appended are null-padded to the committed schema, matching the
-  batch read path.
+- Partition columns are restored per file from the add action's
+  ``partitionValues``, under the partition-column list in force at
+  that version.
+- Column-mapped tables are refused (the batch readers resolve the
+  mapping; this per-file reader does not), and so is a data file
+  holding a column the committed schema lacks: without column mapping
+  only ADD COLUMN is legal evolution.
 - Versions whose JSON was vacuumed away inside the requested range
-  raise (a checkpoint is a snapshot, not a step history) — never a
-  silent gap.
+  raise (a checkpoint is a snapshot, not a step history).
 
-At scale the planner work per batch is parsing the new commit JSONs on
-the driver (log-sized) and the read work is the files each commit
-landed — tailing a 100 TB table costs the day's appends, not the table.
+The commit-JSON read and these refusals are shared with
+``delta_cdf_tail`` through ``DeltaLog``, the table schema through
+``_delta_schema``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
 from .delta_log import (
     _check_metadata,
@@ -56,8 +43,8 @@ from .delta_log import (
     _dv_uid,
     _replay,
     _scan_log_dir,
-    _typed_partition_value,
 )
+from .log_tail import LogTailReader, LogTailSource, TailFile, VersionOffsets
 
 
 def _refuse_column_mapping(configuration: dict | None, path: str) -> None:
@@ -74,75 +61,34 @@ def _refuse_column_mapping(configuration: dict | None, path: str) -> None:
         )
 
 
-class _DeltaFile(InputPartition):
-    def __init__(self, path: str, schema_json: str, pvalues: dict):
-        self.path = path
-        self.schema_json = schema_json
-        self.pvalues = pvalues  # partition column -> string-serialized value
+def _delta_schema(path: str):
+    from pyspark.sql.types import StructType
+
+    snap = _replay(path)
+    _refuse_column_mapping(snap.get("configuration"), path)
+    return StructType.fromJson(json.loads(snap["schema_json"]))
 
 
-class DeltaTailDataSource(DataSource):
-    """Foreign Delta log as a streaming source (format ``delta_tail``)."""
+class DeltaLog(VersionOffsets):
+    """Delta log access shared by ``delta_tail`` and ``delta_cdf_tail``.
+    A reader names the end of its vacuumed-version message
+    (``_vacuumed_hint``) and of its unknown-column refusal
+    (``_unknown_columns_hint``)."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "delta_tail"
+    _no_log = "no JSON commit"
+    _vacuumed_hint: str
+    _unknown_columns_hint: str
 
-    def schema(self):
-        from pyspark.sql.types import StructType
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("delta_tail requires .option('path', ...)")
-        snap = _replay(path)
-        _refuse_column_mapping(snap.get("configuration"), path)
-        return StructType.fromJson(json.loads(snap["schema_json"]))
-
-    def streamReader(self, schema) -> "DeltaTailStreamReader":
-        return DeltaTailStreamReader(self.options, schema)
-
-
-class DeltaTailStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("delta_tail requires .option('path', ...)")
-        self._skip_changes = (
-            str(options.get("skipChangeCommits", "false")).lower() == "true"
-        )
-        starting = options.get("startingVersion")
-        if starting is None:
-            self._first = 0
-        elif str(starting).lower() == "latest":
-            # consume only commits made AFTER the stream starts; resolved
-            # once at construction (the r10 initialOffset-pin rule) so a
-            # checkpointed restart keeps it
-            versions, _ = _scan_log_dir(self._path)
-            self._first = (versions[-1] + 1) if versions else 0
-        else:
-            self._first = int(starting)
-        self._schema_json = schema.json()
-        self._pcols: list[str] | None = None  # lazily resolved
-
-    def initialOffset(self) -> dict:
-        # the offset names the last CONSUMED version; the first batch
-        # therefore covers versions >= startingVersion
-        return {"version": self._first - 1}
-
-    def latestOffset(self) -> dict:
-        versions, _ = _scan_log_dir(self._path)
-        if not versions:
-            raise ValueError(f"no JSON commit at {self._path}")
-        return {"version": versions[-1]}
+    def _log_positions(self) -> list[int]:
+        return _scan_log_dir(self._path)[0]
 
     def _commit_actions(self, v: int) -> list[dict]:
-        log_dir = os.path.join(self._path, "_delta_log")
-        fp = os.path.join(log_dir, f"{v:020d}.json")
+        """Version ``v``'s actions, its protocol checked."""
+        fp = os.path.join(self._path, "_delta_log", f"{v:020d}.json")
         if not os.path.exists(fp):
             raise ValueError(
                 f"version {v} of {self._path} has no JSON commit (vacuumed"
-                " past a checkpoint?); restart the stream with a fresh"
-                " checkpoint from a readable version"
+                f" past a checkpoint?); {self._vacuumed_hint}"
             )
         actions = []
         with open(fp) as fh:
@@ -150,11 +96,42 @@ class DeltaTailStreamReader(DataSourceStreamReader):
                 line = line.strip()
                 if line:
                     actions.append(json.loads(line))
+        for action in actions:
+            if "protocol" in action:
+                _check_protocol(action["protocol"], self._path)
         return actions
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def _check_file_columns(self, names: list[str], path: str, schema) -> None:
+        # the batch path's footer probe (ADVICE r17): null-padding a
+        # renamed column would silently drop its data.  Stray in-file
+        # copies of partition columns are tolerated: the log is
+        # authoritative for their values.
+        allowed = set(schema.names)
+        unknown = [n for n in names if n not in allowed]
+        if unknown:
+            raise NotImplementedError(
+                f"data file {path!r} holds column(s) {unknown} absent from"
+                f" the {self._unknown_columns_hint}"
+            )
+
+
+class DeltaTailStreamReader(DeltaLog, LogTailReader):
+    _format = "delta_tail"
+    _vacuumed_hint = (
+        "restart the stream with a fresh checkpoint from a readable version"
+    )
+    _unknown_columns_hint = (
+        "committed schema; without column mapping only ADD COLUMN is legal"
+        " evolution, so this is a rename/drop this reader cannot resolve."
+    )
+
+    def __init__(self, options, schema):
+        super().__init__(options, schema)
+        self._pcols: list[str] | None = None  # lazily resolved
+
+    def partitions(self, start: dict, end: dict) -> Sequence[TailFile]:
         lo, hi = int(start["version"]), int(end["version"])
-        parts: list[InputPartition] = []
+        parts: list[TailFile] = []
         if self._pcols is None:
             # seed from the snapshot at the batch-START version, not
             # LATEST (ADVICE r17): a stream starting mid-log must
@@ -172,9 +149,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         for v in range(lo + 1, hi + 1):
             adds, changed = [], False
             for action in self._commit_actions(v):
-                if "protocol" in action:
-                    _check_protocol(action["protocol"], self._path)
-                elif "metaData" in action:
+                if "metaData" in action:
                     _check_metadata(action["metaData"], self._path)
                     _refuse_column_mapping(
                         action["metaData"].get("configuration"), self._path
@@ -201,71 +176,23 @@ class DeltaTailStreamReader(DataSourceStreamReader):
                         " changes with the batch read_delta_changes feed."
                     )
                 continue
-            from urllib.parse import unquote
-
             for add in adds:
-                rel = unquote(add["path"])
+                pv = add.get("partitionValues") or {}
                 parts.append(
-                    _DeltaFile(
-                        os.path.join(self._path, rel),
-                        self._schema_json,
-                        {
-                            c: (add.get("partitionValues") or {}).get(c)
-                            for c in self._pcols
-                        },
+                    TailFile(
+                        os.path.join(self._path, unquote(add["path"])),
+                        {c: pv.get(c) for c in self._pcols},
                     )
                 )
         return parts
 
-    def read(self, partition: _DeltaFile) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+class DeltaTailDataSource(LogTailSource):
+    """Foreign Delta log as a streaming source (format ``delta_tail``)."""
 
-        schema = StructType.fromJson(json.loads(partition.schema_json))
-        types = {f.name: f.dataType for f in schema.fields}
-        target = to_arrow_schema(schema)
-        table = pq.read_table(partition.path)
-        # schema-evolution guard, matching the batch path's footer probe
-        # (ADVICE r17): a file holding a column the committed schema
-        # lacks is an out-of-spec RENAME/DROP — null-padding the renamed
-        # column (the else-branch below) would silently drop its data.
-        # Stray in-file copies of partition columns are tolerated: the
-        # log is authoritative for their values.
-        allowed = {f.name for f in schema.fields}
-        unknown = [n for n in table.column_names if n not in allowed]
-        if unknown:
-            raise NotImplementedError(
-                f"data file {partition.path!r} holds column(s)"
-                f" {unknown} absent from the committed schema; without"
-                " column mapping only ADD COLUMN is legal evolution, so"
-                " this is a rename/drop this reader cannot resolve."
-            )
-        cols = []
-        for field in target:
-            if field.name in partition.pvalues:
-                tv = _typed_partition_value(
-                    partition.pvalues[field.name], types[field.name]
-                )
-                cols.append(
-                    pa.array([tv] * table.num_rows).cast(field.type)
-                    if tv is not None
-                    else pa.nulls(table.num_rows, field.type)
-                )
-            elif field.name in table.column_names:
-                cols.append(table.column(field.name).cast(field.type))
-            else:
-                # pre-evolution file: pad appended columns with nulls,
-                # matching the batch read path
-                cols.append(pa.nulls(table.num_rows, field.type))
-        yield from pa.Table.from_arrays(cols, schema=target).to_batches()
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; commit JSONs are
-        # immutable, so there is no source-side state to release
-        pass
+    _format = "delta_tail"
+    _reader = DeltaTailStreamReader
+    _table_schema = staticmethod(_delta_schema)
 
 
 def register_delta_stream_source(spark: SparkSession) -> None:

@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .avro_ocf import parse_avro
+from .delta_log import decoded_file_basename, decoded_scan_path
 from .manifest_table import _filters_to_predicate, _prune_files
 
 _METADATA_RE = re.compile(r"^v(\d+)\.metadata\.json$")
@@ -549,15 +550,6 @@ def _apply_position_deletes(
     apply by exact file identity, and Iceberg never reuses a data-file
     path, so sequence-number bookkeeping is not needed for position
     (it is for equality deletes, which this reader refuses)."""
-    data_path = F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:(//)?", ""
-            ),
-            r"\+",
-            "%2B",
-        )
-    )
     dels = spark.read.parquet(*delete_files).select(
         F.regexp_replace(F.col("file_path"), "^file:(//)?", "").alias(
             "__del_path"
@@ -566,7 +558,7 @@ def _apply_position_deletes(
     )
     cols = df.columns
     return (
-        df.withColumn("__row_path", data_path)
+        df.withColumn("__row_path", decoded_scan_path())
         .withColumn("__row_pos", F.col("_metadata.row_index"))
         .join(
             F.broadcast(dels),
@@ -615,16 +607,7 @@ def _apply_equality_deletes(
         seq_rows, "__seq_path string, __data_seq long"
     )
     cols = df.columns
-    data_path = F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:(//)?", ""
-            ),
-            r"\+",
-            "%2B",
-        )
-    )
-    df = df.withColumn("__seq_path", data_path).join(
+    df = df.withColumn("__seq_path", decoded_scan_path()).join(
         F.broadcast(seq_df), "__seq_path"
     )
 
@@ -731,8 +714,6 @@ def _read_with_restored_partitions(
     BROADCAST (decoded basename -> values) map join, log-sized never
     data-sized.  Basename uniqueness is asserted driver-side."""
     from pyspark.sql.types import StructType
-
-    from .delta_log import decoded_file_basename
 
     restored_cols = [c for _, c in pairs]
     data_schema = StructType(

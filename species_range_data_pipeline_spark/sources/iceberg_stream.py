@@ -1,54 +1,39 @@
-"""Streaming source over an Iceberg Hadoop-layout table: snapshot
-tailing — the Iceberg twin of ``sources/delta_stream.py`` (which tails
-a foreign ``_delta_log``), on Spark 4's Python streaming data source
-API:
+"""Streaming source over an Iceberg Hadoop-layout table (format
+``iceberg_tail``), the Iceberg adapter of the shared log-tail reader
+(``sources/log_tail.py``, which states the offset, append-only and
+replay contract):
 
     register_iceberg_stream_source(spark)
     stream = spark.readStream.format("iceberg_tail").option("path", tbl).load()
 
-- **Offsets are snapshot ids**, resolved against the metadata's
-  snapshot list (the linear history — branched parent chains are
-  refused, the ``iceberg_read_changes`` guard).  A microbatch covers
-  the snapshots after the start offset; its input partitions are
-  exactly the DATA files those snapshots ADDED (live-set difference vs
-  the predecessor snapshot — manifest-entry statuses alone can't be
-  trusted across manifest rewrites), one Spark task per file, never a
-  table rescan.  Snapshots and manifests are immutable, so a batch
-  replayed from the checkpoint re-reads identical rows: exactly-once
-  with an idempotent sink.
-- **Append-only contract, explicitly.**  A snapshot that removed data
-  files or changed the delete-file set (DELETE/UPDATE/MERGE/compaction
-  rewrites) is not representable as an insert-only stream: default is
-  a loud failure; ``.option("skipChangeCommits", "true")`` ignores
-  those snapshots — the same knob as the Delta tail.  Row-level change
-  consumption is ``iceberg_read_changes``' job.
-- **Expired history raises.**  If the checkpointed snapshot id is no
-  longer in the metadata (snapshot expiry), the stream fails with a
-  fresh-checkpoint instruction rather than silently re-emitting or
-  gapping — the manifest_stream vacuumed-baseline rule.
+- Offsets are snapshot ids, resolved against the metadata's snapshot
+  list (the linear history — branched parent chains are refused, the
+  ``iceberg_read_changes`` guard).  A batch's files are the DATA files
+  its snapshots ADDED, found by live-set difference against the
+  predecessor snapshot (manifest-entry statuses alone can't be trusted
+  across manifest rewrites).
+- A snapshot that removed data files or changed the delete-file set
+  (DELETE/UPDATE/MERGE/compaction rewrites) is a change snapshot;
+  row-level change consumption is ``iceberg_cdf_tail``'s or
+  ``iceberg_read_changes``' job.
+- If the checkpointed snapshot id is no longer in the metadata
+  (snapshot expiry), the stream fails with a fresh-checkpoint
+  instruction.
 - Iceberg data files are COMPLETE (identity-partition columns
   in-file), so the per-file reader only null-pads columns appended
   after the file was written; migrated (stripped) layouts are refused
-  by a footer probe on first use, matching the batch read path's
-  boundary.
+  by a footer probe of each newly added file, matching the batch read
+  path's boundary.
 
-At scale the planner work per batch is the manifest walk of the new
-snapshots (driver-side, metadata-sized) and the read work is the files
-each snapshot landed — tailing a 100 TB table costs the day's appends.
+The snapshot walk, the expiry check and the footer probe are shared
+with ``iceberg_cdf_tail`` through ``IcebergLog``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
 
 from .iceberg_log import (
     _current_schema,
@@ -58,12 +43,7 @@ from .iceberg_log import (
     _struct_type,
     _walk_entries,
 )
-
-
-class _IcebergFile(InputPartition):
-    def __init__(self, path: str, schema_json: str):
-        self.path = path
-        self.schema_json = schema_json
+from .log_tail import LogTailReader, LogTailSource, SnapshotOffsets, TailFile
 
 
 def _linear_snapshots(meta: dict, path: str) -> list[dict]:
@@ -80,56 +60,21 @@ def _linear_snapshots(meta: dict, path: str) -> list[dict]:
     return snaps
 
 
-class IcebergTailDataSource(DataSource):
-    """Iceberg Hadoop layout as a streaming source (format
-    ``iceberg_tail``)."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "iceberg_tail"
-
-    def schema(self):
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("iceberg_tail requires .option('path', ...)")
-        meta = _load_metadata(path)
-        return _struct_type(_current_schema(meta, path))
-
-    def streamReader(self, schema) -> "IcebergTailStreamReader":
-        return IcebergTailStreamReader(self.options, schema)
+def _iceberg_schema(path: str):
+    return _struct_type(_current_schema(_load_metadata(path), path))
 
 
-class IcebergTailStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("iceberg_tail requires .option('path', ...)")
-        self._skip_changes = (
-            str(options.get("skipChangeCommits", "false")).lower() == "true"
-        )
-        starting = options.get("startingSnapshotId")
-        if starting is None:
-            self._first_id = None  # from the beginning of history
-        elif str(starting).lower() == "latest":
-            # consume only snapshots committed AFTER the stream starts;
-            # resolved once at construction (the r10 offset-pin rule)
-            meta = _load_metadata(self._path)
-            snaps = _linear_snapshots(meta, self._path)
-            self._first_id = snaps[-1]["snapshot-id"] if snaps else None
-        else:
-            self._first_id = int(starting)
-        self._schema_json = schema.json()
+class IcebergLog(SnapshotOffsets):
+    """Snapshot-log access shared by ``iceberg_tail`` and
+    ``iceberg_cdf_tail``.  A reader names itself in the footer-probe
+    refusal (``_noun``)."""
 
-    def initialOffset(self) -> dict:
-        # the offset names the last CONSUMED snapshot id (None = none)
-        return {"snapshot_id": self._first_id}
+    _no_log = "no snapshot"
+    _noun: str
 
-    def latestOffset(self) -> dict:
+    def _log_positions(self) -> list[int]:
         meta = _load_metadata(self._path)
-        snaps = _linear_snapshots(meta, self._path)
-        if not snaps:
-            raise ValueError(f"no snapshot at {self._path}")
-        return {"snapshot_id": snaps[-1]["snapshot-id"]}
+        return [s["snapshot-id"] for s in _linear_snapshots(meta, self._path)]
 
     def _index_of(self, snaps: list[dict], snapshot_id) -> int:
         """List index of ``snapshot_id``; -1 for the before-first None."""
@@ -144,31 +89,35 @@ class IcebergTailStreamReader(DataSourceStreamReader):
             )
         return ids.index(snapshot_id)
 
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+    def _equality_delete(self, entry: dict) -> None:
+        """An equality-delete file in a walked snapshot (default: it
+        counts as delete coverage like a position delete does)."""
+
+    def _state(self, snap: dict) -> tuple[set[str], set[str]]:
+        """The snapshot's live data files and delete files."""
+        data, dels = set(), set()
+        for kind, d, _sid, _seq in _walk_entries(self._path, snap):
+            if kind == "eqdel":
+                self._equality_delete(d)
+            (data if kind == "data" else dels).add(
+                _resolve(self._path, d["file_path"])
+            )
+        return data, dels
+
+    def _steps(self, start: dict, end: dict):
+        """``(probe, steps)``: ``steps`` lazily yields ``(snapshot id,
+        (data, deletes) before, (data, deletes) after)`` for each
+        snapshot in ``(start, end]``; ``probe(file)`` refuses a
+        migrated-layout data file."""
         meta = _load_metadata(self._path)
         snaps = _linear_snapshots(meta, self._path)
         lo = self._index_of(snaps, start.get("snapshot_id"))
         hi = self._index_of(snaps, end.get("snapshot_id"))
-
-        def _state(i: int) -> tuple[set[str], set[str]]:
-            if i < 0:
-                return set(), set()
-            data, dels = set(), set()
-            for kind, d, _sid, _seq in _walk_entries(self._path, snaps[i]):
-                # equality deletes count as change coverage like
-                # position deletes do: any delete-file change trips the
-                # append-only guard below, which is exactly right
-                (data if kind == "data" else dels).add(
-                    _resolve(self._path, d["file_path"])
-                )
-            return data, dels
-
-        # migrated-layout guard: the per-file reader null-pads columns
-        # missing from a file, which is WRONG for identity-partition
-        # source columns (their values live in the manifest tuples) —
-        # probe each newly added file's footer (one metadata-sized read
-        # per landed file, driver-side) and refuse the stripped layout,
-        # matching the batch path's boundary
+        # the per-file reader null-pads columns missing from a file,
+        # which is WRONG for identity-partition source columns (their
+        # values live in the manifest tuples) — so each newly added
+        # file's footer is probed (one metadata-sized read per landed
+        # file, driver-side) and the stripped layout refused
         id_cols = {
             by_src["name"]
             for pairs in _identity_partition_fields(meta).values()
@@ -177,7 +126,7 @@ class IcebergTailStreamReader(DataSourceStreamReader):
             if by_src["id"] == source_id
         }
 
-        def _probe(fpath: str) -> None:
+        def probe(fpath: str) -> None:
             if not id_cols:
                 return
             import pyarrow.parquet as pq
@@ -187,22 +136,32 @@ class IcebergTailStreamReader(DataSourceStreamReader):
                 raise NotImplementedError(
                     f"data file {fpath!r} lacks identity-partition"
                     f" column(s) {sorted(missing)} (migrated layout);"
-                    " the streaming tail cannot restore manifest"
+                    f" the streaming {self._noun} cannot restore manifest"
                     " partition values — use the batch reader."
                 )
 
-        parts: list[InputPartition] = []
-        prev_data, prev_dels = _state(lo)
-        for i in range(lo + 1, hi + 1):
-            cur_data, cur_dels = _state(i)
-            removed = prev_data - cur_data
-            dels_changed = cur_dels != prev_dels
-            added = sorted(cur_data - prev_data)
-            prev_data, prev_dels = cur_data, cur_dels
-            if removed or dels_changed:
+        def steps():
+            prev = self._state(snaps[lo]) if lo >= 0 else (set(), set())
+            for snap in snaps[lo + 1 : hi + 1]:
+                cur = self._state(snap)
+                yield snap["snapshot-id"], prev, cur
+                prev = cur
+
+        return probe, steps()
+
+
+class IcebergTailStreamReader(IcebergLog, LogTailReader):
+    _format = "iceberg_tail"
+    _noun = "tail"
+
+    def partitions(self, start: dict, end: dict) -> Sequence[TailFile]:
+        probe, steps = self._steps(start, end)
+        parts: list[TailFile] = []
+        for snap_id, (prev_data, prev_dels), (cur_data, cur_dels) in steps:
+            if prev_data - cur_data or cur_dels != prev_dels:
                 if not self._skip_changes:
                     raise ValueError(
-                        f"snapshot {snaps[i]['snapshot-id']} of"
+                        f"snapshot {snap_id} of"
                         f" {self._path} rewrote/removed data or changed"
                         " row-level deletes: not an append-only stream."
                         " Set .option('skipChangeCommits', 'true') to"
@@ -210,36 +169,19 @@ class IcebergTailStreamReader(DataSourceStreamReader):
                         " changes with iceberg_read_changes."
                     )
                 continue
-            for f in added:
-                _probe(f)
-                parts.append(_IcebergFile(f, self._schema_json))
+            for f in sorted(cur_data - prev_data):
+                probe(f)
+                parts.append(TailFile(f))
         return parts
 
-    def read(self, partition: _IcebergFile) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+class IcebergTailDataSource(LogTailSource):
+    """Iceberg Hadoop layout as a streaming source (format
+    ``iceberg_tail``)."""
 
-        schema = StructType.fromJson(json.loads(partition.schema_json))
-        target = to_arrow_schema(schema)
-        table = pq.read_table(partition.path)
-        cols = []
-        for field in target:
-            if field.name in table.column_names:
-                cols.append(table.column(field.name).cast(field.type))
-            else:
-                # a column appended after this file was written is
-                # null-padded, matching the batch read path (absent
-                # identity-partition columns were refused at planning)
-                cols.append(pa.nulls(table.num_rows, field.type))
-        yield from pa.Table.from_arrays(cols, schema=target).to_batches()
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; snapshots/manifests are
-        # immutable, so there is no source-side state to release
-        pass
+    _format = "iceberg_tail"
+    _reader = IcebergTailStreamReader
+    _table_schema = staticmethod(_iceberg_schema)
 
 
 def register_iceberg_stream_source(spark: SparkSession) -> None:

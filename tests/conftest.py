@@ -26,6 +26,29 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def packed_file_splits(spark):
+    """Make every file scan pack all its files into ONE task (tiny
+    per-file open cost, huge split size, no minimum split count), then
+    restore the session conf."""
+    conf = {
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.files.maxPartitionBytes": str(256 << 20),
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="session")
 def registry_plans(spark):
     """ONE construction + formatted-explain of every registered query at

@@ -869,6 +869,46 @@ def _dv_table(tmp_path, name="dv"):
     return table
 
 
+def test_partition_restore_survives_packed_file_splits(
+    spark, tmp_path, packed_file_splits
+):
+    """Several DV'd files of different partitions packed into ONE scan
+    task: every row keeps its own file's partition value.  The restore
+    key used to come from input_file_name() above the DV mask's Arrow
+    UDF, which named another file of the task (delta_read_dv lost two
+    of its ten groups at local[4]); it is now read off the scan's
+    _metadata.file_path, still percent-decoded for names holding a
+    space, '%' or '+'."""
+    from urllib.parse import quote
+
+    from species_range_data_pipeline_spark.sources.dv import (
+        make_inline_descriptor,
+    )
+
+    table = str(tmp_path / "packed")
+    fields = [("k", "long"), ("y", "integer")]
+    adds, expected = [], set()
+    for i, name in enumerate(("f0.parquet", "f 1+%.parquet", "f2.parquet")):
+        year = str(2020 + i)
+        ks = [10 * i + j for j in range(4)]
+        a = _data_file(
+            table, f"y={year}/{name}", {"k": pa.array(ks, pa.int64())}
+        )
+        a["add"]["path"] = f"y={year}/{quote(name)}"
+        a["add"]["partitionValues"] = {"y": year}
+        a["add"]["deletionVector"] = make_inline_descriptor([0])
+        adds.append(a)
+        expected |= {(k, 2020 + i) for k in ks[1:]}
+    _commit(
+        table, 0, [_PROTOCOL_DV, _meta(fields, partition_cols=["y"]), *adds]
+    )
+
+    scan = spark.read.parquet(*delta_scan_files(table))
+    assert scan.rdd.getNumPartitions() == 1  # the packing took effect
+    got = {(r.k, r.y) for r in read_delta_table(spark, table).collect()}
+    assert got == expected
+
+
 def test_deletion_vectors_masked_on_read(spark, tmp_path):
     """File- and inline-stored DVs mask exactly their positions; time
     travel before the DV still sees every row; the same-commit

@@ -1062,6 +1062,45 @@ def test_position_deletes_compose_with_migrated_restore(spark, tmp_path):
     assert got == {(1, 2020, "a"), (3, 2020, "c")}
 
 
+def test_migrated_restore_survives_packed_file_splits(
+    spark, tmp_path, packed_file_splits
+):
+    """Several migrated-layout files of different partitions packed
+    into ONE scan task, under a position-delete mask: every row keeps
+    its own file's manifest partition value (the restore key is read
+    off the scan's _metadata.file_path, percent-decoded)."""
+    root = str(tmp_path / "packedmig")
+    b = _Builder(root)
+    entries, dels, expected = [], [], set()
+    for i, name in enumerate(("m0.parquet", "m 1+%.parquet", "m2.parquet")):
+        year = 2020 + i
+        ks = [10 * i + j for j in range(4)]
+        fp = os.path.join(root, "data", name)
+        pq.write_table(  # migrated: NO year column in-file
+            pa.table(
+                {"k": pa.array(ks, pa.int64()), "v": [str(k) for k in ks]}
+            ),
+            fp,
+        )
+        entries.append((1, fp, {"year": year}, len(ks), 0))
+        dels.append(fp)
+        expected |= {(k, year) for k in ks[1:]}
+    m1 = b.manifest("m1.avro", entries)
+    b.snapshot(100, [m1])
+    pd_path = os.path.join(root, "data", "pd.parquet")
+    pq.write_table(
+        pa.table({"file_path": dels, "pos": pa.array([0] * 3, pa.int64())}),
+        pd_path,
+    )
+    md = b.manifest("md.avro", [(1, pd_path, {"year": None}, 3, 1)])
+    b.snapshot(200, [m1, md], contents=[0, 1])
+    b.commit(current_snapshot_id=200)
+
+    assert spark.read.parquet(*dels).rdd.getNumPartitions() == 1
+    got = {(r.k, r.year) for r in read_iceberg_table(spark, root).collect()}
+    assert got == expected
+
+
 def _mor_history(tmp_path, name="morhist"):
     """s100: f20(k 1..4, 2020) + f21(k 5..6, 2021); s150: append
     f22(k 7..8, 2022); s200: position deletes mask k=2,4 (f20) and k=6

@@ -745,17 +745,30 @@ def test_stream_state_partitions_env_and_default(spark, monkeypatch):
     assert spark.conf.get(key) == before
 
 
-def test_stream_tumbling_counts_state_partition_count_took_effect(spark):
+def test_stream_tumbling_counts_state_partition_count_took_effect(
+    spark, monkeypatch
+):
     """The drained query's shuffle width must really be the stream-state
-    value: with the env forcing 3 partitions, the lane's results stay
-    byte-identical to an unforced run (state partitioning is layout,
-    never semantics)."""
+    value: with the env forcing 3 partitions, every stateful operator of
+    the drained query reports 3 shuffle partitions in its progress, and
+    the lane's results stay byte-identical to an unforced run (state
+    partitioning is layout, never semantics)."""
     import os
 
+    from species_range_data_pipeline_spark.plans import events
     from species_range_data_pipeline_spark.plans.events import (
         stream_tumbling_counts,
     )
 
+    real_drain = events.drain_available_now
+    drained = []
+
+    def _recording_drain(*args, **kwargs):
+        q = real_drain(*args, **kwargs)
+        drained.append(q)
+        return q
+
+    monkeypatch.setattr(events, "drain_available_now", _recording_drain)
     forced = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
     try:
         os.environ["SPARK_GRAFT_STREAM_PARTITIONS"] = "3"
@@ -768,3 +781,9 @@ def test_stream_tumbling_counts_state_partition_count_took_effect(spark):
         else:
             os.environ.pop("SPARK_GRAFT_STREAM_PARTITIONS", None)
     assert a == b and a
+    widths = {
+        op["numShufflePartitions"]
+        for p in drained[0].recentProgress
+        for op in p.get("stateOperators") or []
+    }
+    assert widths == {3}
