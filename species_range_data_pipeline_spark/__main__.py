@@ -51,9 +51,10 @@ def _etl(args) -> int:
         else None
     )
     result = run_pipeline(cells, thresholds=thresholds)
-    # the lineage (zip parse -> polygonize -> dissolve) is expensive:
-    # materialize once so the sink write, the export, and the final
-    # count don't each replay it
+    # the extract (unzip + decode) is materialized once inside
+    # load_cells_from_zips; persisting the result as well keeps the sink
+    # write, the export and the final count from each re-running the
+    # dissolve over it
     result = result.persist()
     try:
         write_speciesdata(

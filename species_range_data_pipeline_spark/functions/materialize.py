@@ -9,6 +9,14 @@ executor block storage (memory, spilling to disk) on first use and
 every later reference reads the stored blocks — one corpus pass instead
 of N.
 
+Callers: the query lanes under ``plans/``, and the species ETL's extract
+(``pipeline/species.load_cells_from_zips``), whose one decoded cell
+frame is read by the dissolve's sizing job, the sink and the error
+collect — each archive is unzipped and decoded once per pass.  For the
+ETL, trade-off 1 below means that losing an executor after the extract
+materializes fails the pass instead of recomputing the lost partitions;
+the pass is rerun from the archives.
+
 The trade-offs a caller signs up for (all three are why this is a
 deliberate, centralized decision and not a default):
 

@@ -33,7 +33,7 @@ from ..functions.geometry import polygonize_cells, union_cells_to_multipolygon
 
 def _affine_of(pdf: pd.DataFrame, default):
     """Per-group georeferencing: read (xll, yll, cellsize, nrows) columns if
-    present (decode_ascii_members emits them), else the supplied defaults.
+    present (the raster decoders emit them), else the supplied defaults.
     A group must share one lattice — rasters on different grids belong in
     different groups (tile key), not one union."""
     if "xll" in pdf.columns:

@@ -139,29 +139,47 @@ def parse_ascii_grid(content: bytes) -> tuple[dict, list[tuple[int, int, float]]
 def decode_ascii_members(members: DataFrame, name_col: str = "member") -> DataFrame:
     """T2+T3 collapsed: ASCII grid bytes -> long-format cell rows with the
     georeferencing header carried per row (SURVEY.md §1.3 model (b))."""
+    return decode_members(members, parse_ascii_grid, name_col)
+
+
+def decode_members(members: DataFrame, parser, name_col: str = "member") -> DataFrame:
+    """The one member-decode loop: ``parser(bytes) -> (header, cells)`` per
+    member, mapped to ``CELL_SCHEMA`` rows keyed by ``name_col``.  A parse
+    failure becomes an error row.  When ``members`` carries an ``error``
+    column (``expand_zip``'s output), a row with an error is passed through
+    as an error row with that text, unparsed."""
+    cols = [name_col, "content"] + (["error"] if "error" in members.columns else [])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for name, blob in zip(pdf[name_col], pdf["content"]):
-                try:
-                    header, cells = parse_ascii_grid(bytes(blob))
-                    xll = header.get("xllcorner", 0.0)
-                    yll = header.get("yllcorner", 0.0)
-                    cs = header.get("cellsize", 1.0)
-                    nr = int(header.get("nrows", 0))
-                    for r, c, v in cells:
-                        out.append(
-                            {"file": name, "row": r, "col": c, "value": v,
-                             "xll": xll, "yll": yll, "cellsize": cs,
-                             "nrows": nr, "error": None}
-                        )
-                except Exception as exc:  # decode failure -> error channel
-                    out.append(
-                        {"file": name, "row": None, "col": None, "value": None,
-                         "xll": None, "yll": None, "cellsize": None,
-                         "nrows": None, "error": f"{type(exc).__name__}: {exc}"}
-                    )
-            yield pd.DataFrame(out, columns=[f.name for f in CELL_SCHEMA.fields])
+            yield _decode_batch(pdf, name_col, parser)
 
-    return members.select(name_col, "content").mapInPandas(fn, CELL_SCHEMA)
+    return members.select(*cols).mapInPandas(fn, CELL_SCHEMA)
+
+
+def _decode_batch(pdf: pd.DataFrame, name_col: str, parser) -> pd.DataFrame:
+    out = []
+    errors = pdf["error"] if "error" in pdf.columns else [None] * len(pdf)
+    for name, blob, error in zip(pdf[name_col], pdf["content"], errors):
+        if error is None:
+            try:
+                header, cells = parser(bytes(blob))
+                xll = header.get("xllcorner", 0.0)
+                yll = header.get("yllcorner", 0.0)
+                cs = header.get("cellsize", 1.0)
+                nr = int(header.get("nrows", 0))
+                for r, c, v in cells:
+                    out.append(
+                        {"file": name, "row": r, "col": c, "value": v,
+                         "xll": xll, "yll": yll, "cellsize": cs,
+                         "nrows": nr, "error": None}
+                    )
+                continue
+            except Exception as exc:  # decode failure -> error channel
+                error = f"{type(exc).__name__}: {exc}"
+        out.append(
+            {"file": name, "row": None, "col": None, "value": None,
+             "xll": None, "yll": None, "cellsize": None,
+             "nrows": None, "error": error}
+        )
+    return pd.DataFrame(out, columns=[f.name for f in CELL_SCHEMA.fields])

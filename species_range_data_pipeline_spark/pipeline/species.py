@@ -6,15 +6,22 @@ every stage.  Here the stages are a single DataFrame lineage — the barriers
 disappear (SURVEY.md §3), parallelism is task scheduling, and every former
 silent failure is an error-channel row.
 
-    zips (binaryFile) --expand_zip--> members --decode_ascii--> cell rows
-      cells x thresholds[0.25,0.5,0.75]  (X1: literal explode, no join)
-      filter value >= threshold           (F3)
-      polygonize per (species,file,thr)   (T4: applyInPandas)
-      filename -> attributes              (T6: column expressions)
-      dissolve by species+scenario key    (A1: cell-space union)
-      area                                (C1: shoelace, square degrees)
-      sid                                 (P5: row_number over explicit order)
-      sink                                (K1: parquet native / JDBC adapter)
+    zips (binaryFile) --expand_zip--> members (+ expand error rows)
+      --decode_raster_members--> cell rows + error rows   (one decode)
+      --materialize_once--> ONE extract, read by every action below
+         |-- error is null     -> good cells
+         |     x thresholds[0.25,0.5,0.75]  (X1: literal explode, no join)
+         |     filter value >= threshold    (F3)
+         |     filename -> attributes       (T6: column expressions)
+         |     dissolve_auto by the key     (A1: sizing job, then cell-space
+         |                                   union; area from the kernel)
+         |     sid                          (P5: row_number, explicit order)
+         |     sink                         (K1: parquet native / JDBC)
+         '-- error not null  -> error side-channel (item, error)
+
+The extract materializes inside the first action that reads it (the
+dissolve's sizing job); the sink and the error collect read its blocks
+instead of unzipping and decoding the archives again.
 
 Attribute quirks preserved for parity with the reference: threshold rendered
 as the string "25"/"50"/"75" (``:190,200``), year stays a string (the
@@ -26,7 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.polygonize import dissolve_auto, polygonize
+from ..functions.materialize import materialize_once
+from ..operators.polygonize import dissolve_auto
 from .geotiff import decode_raster_members
 from .raster import expand_zip, read_binary_files
 
@@ -36,28 +44,24 @@ THRESHOLDS = [0.25, 0.5, 0.75]
 def load_cells_from_zips(spark: SparkSession, zip_dir: str) -> tuple[DataFrame, DataFrame]:
     """extract(): zip archives -> (cell rows, error rows).  Members may be
     ASCII grids or GeoTIFFs (the reference's workspace holds both,
-    ``species_range_etl.py:87-92``); the decoder sniffs per member."""
+    ``species_range_etl.py:87-92``); the decoder sniffs per member.
+
+    Both frames are filters over one decoded frame that materializes on
+    first use, so a pass unzips and decodes each archive once however many
+    actions read it.  Expand failures (``BadZipFile``, an oversized member)
+    pass through the decoder as error rows keyed by their archive; decode
+    failures are keyed by the member.  Members that are not rasters are
+    dropped."""
     members = expand_zip(read_binary_files(spark, zip_dir, glob="*.zip"))
-    errors_zip = members.where(F.col("error").isNotNull()).select(
-        F.col("archive").alias("item"), "error"
+    failed = F.col("error").isNotNull()
+    decodable = members.where(
+        failed | F.col("member").rlike(r"\.(asc|txt|tif|tiff|nc)$")
+    ).select(
+        F.when(failed, F.col("archive")).otherwise(F.col("member")).alias("member"),
+        "content",
+        "error",
     )
-    rasters = members.where(
-        F.col("error").isNull() & F.col("member").rlike(r"\.(asc|txt|tif|tiff|nc)$")
-    )
-    cells = decode_raster_members(rasters)
-    errors_dec = cells.where(F.col("error").isNotNull()).select(
-        F.col("file").alias("item"), "error"
-    )
-    good = cells.where(F.col("error").isNull())
-    return good, errors_zip.unionByName(errors_dec)
-
-
-def load_cells_from_dir(spark: SparkSession, raster_dir: str) -> tuple[DataFrame, DataFrame]:
-    """extract() variant for pre-landed .asc/.tif files."""
-    files = read_binary_files(
-        spark, raster_dir, glob="*.{asc,tif,tiff}"
-    ).select(F.col("path").alias("member"), "content")
-    cells = decode_raster_members(files)
+    cells = materialize_once(decode_raster_members(decodable))
     errors = cells.where(F.col("error").isNotNull()).select(
         F.col("file").alias("item"), "error"
     )

@@ -3,6 +3,9 @@ the remainder executes; the final sink equals a clean one-shot run."""
 
 from __future__ import annotations
 
+import gc
+import time
+
 from pyspark.sql import functions as F
 
 from species_range_data_pipeline_spark.catalog import load_table
@@ -54,35 +57,75 @@ def test_restartable_run_resumes_where_it_stopped(spark, tmp_path):
     assert back.select("o_orderkey").distinct().count() == n_total
 
 
+def _n_persistent(spark) -> int:
+    """Size of the session's persistent-RDD registry once unreachable
+    frames are released.  Release is GC-driven (documented in
+    functions/materialize.py) and takes three asynchronous hops: a Python
+    cyclic GC frees the DataFrame (py4j proxies sit in reference cycles
+    with their cached method objects), py4j's finalizer thread (1 s poll)
+    then drops the JVM handle, and a JVM GC lets the ContextCleaner
+    unpersist the RDD.  The registry snapshot read here is itself a py4j
+    handle holding every RDD it lists, so each JVM GC waits out the
+    finalizer first — otherwise the previous read keeps the RDDs it saw
+    alive and the count never comes down."""
+    gc.collect()
+    time.sleep(1.5)
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(0.5)
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _growth_after_release(spark, baseline: int, bound: int) -> int:
+    """Registry growth over ``baseline``, polled for up to 60 s until it
+    is within ``bound``."""
+    deadline = time.time() + 60
+    while (grown := _n_persistent(spark) - baseline) > bound and time.time() < deadline:
+        pass
+    return grown
+
+
 def test_materialize_once_blocks_bounded(spark):
     """r19 (VERDICT r18 #7): materialize_once (lazy localCheckpoint)
     frames are released by the ContextCleaner once the DataFrame becomes
     unreachable and a GC runs — a loop of lane invocations must not grow
     executor block-manager storage without bound.  50 invocations of a
     checkpointing lane, references dropped each time, then GC: the
-    persistent-RDD registry must come back to a small constant, not ~50
-    entries."""
-    import gc
-    import time
-
+    persistent-RDD registry must come back to within a small constant of
+    where it stood before the loop, not ~50 entries above it."""
     from species_range_data_pipeline_spark.plans import registry
 
     fn = registry.all_queries()["dedup_repeated_ngrams"]
+    baseline = _n_persistent(spark)
     for _ in range(50):
         df = fn(spark, SF_SMOKE)
         df.write.format("noop").mode("overwrite").save()
         del df
+    grown = _growth_after_release(spark, baseline, 10)
+    assert grown <= 10, (grown, baseline)
 
-    def n_persistent() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    # release is GC-driven (documented in functions/materialize.py):
-    # drop Python refs, force both GCs, and poll for the async cleaner
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        if n_persistent() <= 10:
-            break
-        time.sleep(1)
-    assert n_persistent() <= 10, n_persistent()
+def test_etl_extract_blocks_bounded(spark, tmp_path):
+    """The species ETL's extract is a materialize_once frame too: 20 full
+    passes (extract, pipeline, error collect), references dropped each
+    time, then GC — the registry grows by at most the same small bound."""
+    import zipfile
+
+    from species_range_data_pipeline_spark.pipeline.species import (
+        load_cells_from_zips,
+        run_pipeline,
+    )
+
+    from .test_pipeline import _asc_bytes, _grid
+
+    with zipfile.ZipFile(tmp_path / "abies-balsamea.zip", "w") as zf:
+        zf.writestr("abies-balsamea__25_current.asc", _asc_bytes(_grid(1)))
+    (tmp_path / "broken.zip").write_bytes(b"this is not a zip file")
+
+    baseline = _n_persistent(spark)
+    for _ in range(20):
+        cells, errors = load_cells_from_zips(spark, str(tmp_path))
+        run_pipeline(cells).write.format("noop").mode("overwrite").save()
+        assert len(errors.collect()) == 1
+        del cells, errors
+    grown = _growth_after_release(spark, baseline, 10)
+    assert grown <= 10, (grown, baseline)

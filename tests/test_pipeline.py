@@ -396,3 +396,75 @@ def test_cli_probe_all_lanes(tmp_path, capsys):
     bad.write_bytes(b"\x00\x01junk")
     assert main(["probe", str(bad)]) == 2
     assert "error" in json.loads(capsys.readouterr().out.strip())
+
+
+def test_error_channel_through_the_extract(spark, tmp_path, monkeypatch):
+    """Every error kind reaches ``load_cells_from_zips``'s error frame
+    exactly once, with the item and text the extract has always given it:
+    a corrupt archive and an oversized member are keyed by the archive
+    path, a grid that fails to decode by its member name.  A member that
+    is not a raster is dropped without an error row; a healthy sibling of
+    the oversized member still decodes."""
+    from species_range_data_pipeline_spark.pipeline import raster
+
+    monkeypatch.setattr(raster, "MAX_MEMBER_BYTES", 1000)
+    d = tmp_path / "zips"
+    d.mkdir()
+    (d / "broken.zip").write_bytes(b"this is not a zip file")
+    with zipfile.ZipFile(d / "bomb.zip", "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("abies-balsamea__25_big.asc", b"0" * 100_000)
+        zf.writestr("abies-balsamea__25_current.asc", _asc_bytes(_grid(1)))
+    with zipfile.ZipFile(d / "mixed.zip", "w") as zf:
+        zf.writestr("acer-rubrum__25_current.asc", b"ncols 2\nnrows 1\nfoo bar\n")
+        zf.writestr("README.pdf", b"not a raster")
+
+    cells, errors = load_cells_from_zips(spark, str(d))
+    got = sorted((r.item, r.error) for r in errors.collect())
+    assert got == sorted([
+        (f"file:{d / 'broken.zip'}", "BadZipFile: File is not a zip file"),
+        (f"file:{d / 'bomb.zip'}", "member too large: 100000 bytes"),
+        ("acer-rubrum__25_current.asc",
+         "ValueError: could not convert string to float: 'foo'"),
+    ])
+    files = {r.file for r in cells.select("file").distinct().collect()}
+    assert files == {"abies-balsamea__25_current.asc"}
+    assert cells.count() == NROWS * NCOLS - 1
+
+
+def _plan_nodes(node):
+    """Every node of a JVM plan tree, walked through ``children()``."""
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _scans(df):
+    """(ids of the checkpointed RDDs, number of binaryFile scans) over the
+    physical plan tree of ``df``."""
+    rdd_ids, binary_scans = set(), 0
+    for node in _plan_nodes(df._jdf.queryExecution().sparkPlan()):
+        kind = node.getClass().getSimpleName()
+        if kind == "RDDScanExec":
+            rdd_ids.add(node.rdd().id())
+        elif kind == "FileSourceScanExec":
+            binary_scans += "BinaryFile" in node.relation().fileFormat().getClass().getSimpleName()
+    return rdd_ids, binary_scans
+
+
+def test_extract_decodes_once(spark, zip_dir):
+    """The cell frame and the error frame are filters over ONE
+    materialized extract: both plans scan the same checkpointed RDD, and
+    neither the pipeline's plan nor the error channel's scans the
+    archives again."""
+    from species_range_data_pipeline_spark.pipeline.raster import read_binary_files
+
+    assert _scans(read_binary_files(spark, zip_dir)) == (set(), 1)  # the probe sees a scan
+    cells, errors = load_cells_from_zips(spark, zip_dir)
+    cell_rdds, cell_scans = _scans(cells)
+    err_rdds, err_scans = _scans(errors)
+    assert len(cell_rdds) == 1 and err_rdds == cell_rdds
+    assert cell_scans == err_scans == 0
+
+    result_rdds, result_scans = _scans(run_pipeline(cells))
+    assert result_rdds == cell_rdds and result_scans == 0
